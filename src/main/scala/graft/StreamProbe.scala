@@ -12,6 +12,10 @@ object StreamProbe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val filter = args.headOption.getOrElse("stream_")
+    if ((filter == "phases" || filter == "jobs") && args.length < 2) {
+      Console.err.println(s"usage: graft.StreamProbe $filter <query> [reps]")
+      return
+    }
     // lazy: in "jobs" mode args(1) is a query name, not a rep count
     def reps = args.lift(1).map(_.toInt).getOrElse(2)
     val spark = SparkSession.builder()
@@ -28,7 +32,7 @@ object StreamProbe {
     // measure join-state commits vs sink epochs vs trigger count before
     // touching a streaming row).
     if (filter == "phases") {
-      val name = args(1)
+      val name = args(1) // present: checked before the session starts
       val preps = args.lift(2).map(_.toInt).getOrElse(2)
       graft.streaming.StreamCapture.enable()
       for (r <- 1 to preps) {

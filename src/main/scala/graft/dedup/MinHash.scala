@@ -2,114 +2,68 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.MinHashKernel
 
 /** MinHash + LSH near-duplicate detection over text, DataFrame-only.
   *
   * Pipeline (all distributed, no driver-side loops):
-  *   1. shingle: word n-grams per doc, exploded to (doc, shingle) rows
-  *   2. base hash: ONE string hash per shingle (`xxhash64`, codegen'd)
-  *   3. signature: k minhashes as k `min(xxhash64(seed_i, base))` aggregate
-  *      columns — a plain groupBy, so Catalyst partial-aggregates map-side
-  *      and the whole stage is codegen'd
-  *   4. banding: split the k mins into b bands of r; band key = hash of the
-  *      band's mins; docs sharing any band key become candidates (standard
-  *      LSH S-curve: P[candidate] = 1-(1-J^r)^b)
-  *   5. candidate pairs: self-join on (band, key) with id < id — the only
+  *   1. sketch: one per-document kernel pass ([[MinHashKernel]]) splits the
+  *      text, hashes each token once, fuses the n-gram shingle hashes,
+  *      sorts and dedups them, then takes the k mins
+  *      `min(xxhash64(seed_i, h))` and the b band keys — a row-local
+  *      generator, no exchange
+  *   2. banding: b bands of r = k / b mins; band key = hash of the band's
+  *      mins; docs sharing any band key become candidates (standard LSH
+  *      S-curve: P[candidate] = 1-(1-J^r)^b)
+  *   3. candidate pairs: self-join on (band, key) with id < id — the only
   *      shuffle-join, on the tiny banded projection, never on the texts
-  *   6. exact verify: inverted-index join on distinct shingle hashes —
-  *      true Jaccard from |A∩B| counts, all equi-joins on longs
+  *   4. exact verify: the two documents' sorted distinct-hash arrays are
+  *      merge-walked for |A∩B| — true Jaccard
   *
-  * Design note for scale: an earlier formulation computed the signature with
-  * nested higher-order-function lambdas (`transform`/`aggregate`). Spark
-  * evaluates HOF lambdas interpreted — outside whole-stage codegen — and
-  * re-evaluates multiply-referenced sub-expressions, which made signatures
-  * ~60× slower than this explode+groupBy shape. Everything here stays inside
-  * WholeStageCodegen with map-side combine; cost is O(shingles · k) long ops.
+  * Design note for scale: a document's shingles, signature and bands depend
+  * on that document alone, so one kernel pass computes them where the row
+  * is, over a primitive `long[]`: O(tokens) byte hashing, a sort of the s
+  * shingle hashes, and O(s · k) long hashes for the mins. No exchange and
+  * no per-shingle rows, so the only shuffles left are the banded self-join
+  * and its pair dedup. Values are bit-identical to the relational
+  * explode/window/groupBy formulation, which DedupSpec keeps as the parity
+  * reference. (Spark higher-order lambdas are no substitute: they run
+  * interpreted over boxed arrays, ~60× slower on signatures.)
+  *
+  * Ids are the document key: each must be unique. Docs with no shingles
+  * (NULL text, fewer than n tokens) drop out — they cannot near-dup match.
   *
   * Skew: a hot band bucket (shared boilerplate) is capped by `maxBucket`
   * before the self-join; AQE skew-join splitting covers the rest.
   */
 object MinHash {
 
-  /** (id, shingle-base-hash) rows: one codegen'd string hash per shingle.
-    *
-    * Shingles are assembled with window `lead`s over exploded tokens rather
-    * than array lambdas (HOF shingle construction is interpreted and was the
-    * dominant cost). Duplicate shingles are NOT removed — `min` is
-    * duplicate-insensitive, so signatures are unchanged and we skip a
-    * per-doc distinct. The window's hash-partitioning by id is reused by the
-    * downstream groupBy: one exchange total.
+  /** (id, `names`…) rows of the kernel's sketch per doc with shingles (see
+    * [[MinHashKernel.sketchRows]] for the `numHashes`/`numBands` modes).
     */
-  private def baseHashes(docs: DataFrame, idCol: String, textCol: String,
-                         shingleN: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id")).orderBy(col("pos"))
-    // Hash each token ONCE, then fuse the n consecutive token hashes into the
-    // shingle base with one fixed-width xxhash64 — no per-shingle string
-    // allocation/concat (each input byte is hashed once instead of n times).
-    val leads = (0 until shingleN).map {
-      case 0 => col("th")
-      case i => lead(col("th"), i).over(w)
-    }
+  private def sketches(docs: DataFrame, idCol: String, textCol: String,
+                       names: Seq[String], shingleN: Int, numHashes: Int = 0,
+                       numBands: Int = 0): DataFrame =
     docs.select(col(idCol).as("id"),
-      posexplode(split(col(textCol), " ")).as(Seq("pos", "t")))
-      .select(col("id"), col("pos"), xxhash64(col("t")).as("th"))
-      .select(col("id"), xxhash64(leads: _*).as("h"), leads.last.isNotNull.as("full"))
-      .filter(col("full"))
-      .select(col("id"), col("h"))
-  }
-
-  /** Distinct (id, shingle-hash) rows — the one frame both the signature and
-    * the exact-verify paths consume. The dedup aggregate and the downstream
-    * per-id groupBys all ride the window's hash-partitioning by id (id is a
-    * subset of every grouping), so none of them re-shuffle, and the shared
-    * exchange is computed once (ReuseExchange) when a query derives both
-    * signatures and verification from the same call.
-    */
-  def distinctHashes(docs: DataFrame, idCol: String, textCol: String,
-                     shingleN: Int): DataFrame =
-    baseHashes(docs, idCol, textCol, shingleN).distinct()
-
-  /** k minhash columns m0..m(k-1) per doc id from distinct shingle hashes. */
-  def signatureColsFromHashes(hs: DataFrame, k: Int): DataFrame = {
-    val aggs = (0 until k).map(i => min(xxhash64(lit(i), col("h"))).as(s"m$i"))
-    hs.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** k minhash columns m0..m(k-1) per doc id. Docs with no shingles (fewer
-    * than n tokens) drop out — they cannot near-dup match by definition.
-    *
-    * Seed mixing uses `xxhash64(seed_i, base)` — one string hash per shingle
-    * plus k fixed-width hashes, and the k mixes run over DISTINCT shingles
-    * only (min is duplicate-insensitive, so signatures are unchanged and
-    * repeated shingles aren't re-mixed k times). (An affine a·x+b family
-    * would be cheaper but needs wrapping long arithmetic, which ANSI mode
-    * forbids.)
-    */
-  def signatureCols(docs: DataFrame, idCol: String, textCol: String,
-                    shingleN: Int, k: Int): DataFrame =
-    signatureColsFromHashes(distinctHashes(docs, idCol, textCol, shingleN), k)
+      MinHashKernel.sketchRows(col(textCol), shingleN, numHashes, numBands).as(names))
 
   /** k-minhash signature as a single array<long> column (id, sig). */
   def signatures(docs: DataFrame, idCol: String, textCol: String,
-                 shingleN: Int = 3, k: Int = 64): DataFrame =
-    signatureCols(docs, idCol, textCol, shingleN, k)
-      .select(col("id"), array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
+                 shingleN: Int = 3, k: Int = 64): DataFrame = {
+    require(k >= 1, "k must be >= 1")
+    sketches(docs, idCol, textCol, Seq("sig"), shingleN, k)
+  }
 
   /** (id, band, band_key) LSH banding rows for each doc: the unit of
     * near-dup candidacy (two docs sharing any (band, band_key) are
     * candidates). Public building block — the batch pair-finder and the
     * streaming ingest filter both consume it.
     */
-  def bandKeys(mins: DataFrame, numHashes: Int, numBands: Int): DataFrame = {
-    require(numHashes % numBands == 0, "numHashes must be divisible by numBands")
-    val r = numHashes / numBands
-    mins.select(col("id"),
-      explode(array((0 until numBands).map { j =>
-        struct(lit(j).as("band"),
-          xxhash64((j * r until (j + 1) * r).map(i => col(s"m$i")): _*).as("band_key"))
-      }: _*)).as("bk"))
-      .select(col("id"), col("bk.band"), col("bk.band_key"))
+  def bandKeys(docs: DataFrame, idCol: String, textCol: String,
+               shingleN: Int = 3, numHashes: Int = 64,
+               numBands: Int = 16): DataFrame = {
+    require(numBands >= 1, "numBands must be >= 1")
+    sketches(docs, idCol, textCol, Seq("band", "band_key"), shingleN, numHashes, numBands)
   }
 
   /** Candidate pairs from banded rows: skew-cap pathological buckets, then
@@ -117,7 +71,7 @@ object MinHash {
     * fast path and the md5-portable variant (one place for the bucket cap
     * and the id1<id2 convention).
     */
-  private def candidatePairs(banded: DataFrame, maxBucket: Int): DataFrame = {
+  private[dedup] def candidatePairs(banded: DataFrame, maxBucket: Int): DataFrame = {
     val bucketed = banded
       .withColumn("__n", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("band"), col("band_key"))))
@@ -131,9 +85,10 @@ object MinHash {
 
   /** Exact Jaccard for candidate pairs via the inverted index on distinct
     * (id, h) rows: |A∩B| as equi-joined row counts — hash joins over longs,
-    * no per-pair array work. Shared by both hash families.
+    * no per-pair array work. The portable variant's verify (the fast path
+    * merge-walks the kernel's hash arrays instead).
     */
-  private def verifyJaccard(hs: DataFrame, candidates: DataFrame): DataFrame = {
+  private[dedup] def verifyJaccard(hs: DataFrame, candidates: DataFrame): DataFrame = {
     val sizes = hs.groupBy(col("id")).agg(count(lit(1)).as("n"))
     candidates
       .join(hs.select(col("id").as("id1"), col("h")), "id1")
@@ -291,23 +246,21 @@ object MinHash {
     (hs, banded)
   }
 
-  /** Candidate near-dup pairs (id1 < id2) with exact Jaccard attached. */
+  /** Candidate near-dup pairs (id1 < id2) with exact Jaccard attached.
+    * Lazy and unlanded: the sketches are per-row generators, so each
+    * consumer (bands, both verify sides) recomputes them from `docs`
+    * instead of reading a materialized (id, h) stage.
+    */
   def nearDupPairs(docs: DataFrame, idCol: String, textCol: String,
                    shingleN: Int = 3, numHashes: Int = 64, numBands: Int = 16,
                    maxBucket: Int = 1000): DataFrame = {
-    // LANDED like the portable twin: four consumers (signature mins, both
-    // verify sides, sizes) prune columns differently, which breaks the
-    // exchange-subtree identity ReuseExchange matches on — the corpus
-    // tokenize + shingle hash re-derived per consumer (measured on the
-    // containment gate row: 3.7 → 2.1 s warm at sf0.1 once landed).
-    val hs = graft.relational.Stages.materialize(
-      distinctHashes(docs, idCol, textCol, shingleN), "minhash_hs")
-    val mins = signatureColsFromHashes(hs, numHashes)
-    val banded = bandKeys(mins, numHashes, numBands)
-    // Exact verify runs on distinct shingle-HASH sets via the inverted
-    // index (xxhash64 collisions are the only divergence from string-set
-    // jaccard — negligible at 2^-64); `hs` is the landed frame the
-    // signatures consumed.
-    verifyJaccard(hs, candidatePairs(banded, maxBucket))
+    // verify runs on distinct shingle-HASH sets (xxhash64 collisions are the
+    // only divergence from string-set jaccard — negligible at 2^-64)
+    val hs = sketches(docs, idCol, textCol, Seq("hs"), shingleN)
+    candidatePairs(bandKeys(docs, idCol, textCol, shingleN, numHashes, numBands), maxBucket)
+      .join(hs.select(col("id").as("id1"), col("hs").as("hs1")), "id1")
+      .join(hs.select(col("id").as("id2"), col("hs").as("hs2")), "id2")
+      .select(col("id1"), col("id2"),
+        MinHashKernel.jaccardCol(col("hs1"), col("hs2")).as("jaccard"))
   }
 }

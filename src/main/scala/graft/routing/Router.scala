@@ -39,6 +39,8 @@ object Router {
   /** Routing verdict tags carried in the `__route` column. */
   val TagCol = "__route"
   val ReasonCol = "__reason"
+  /** Working column of [[tag]]; input frames must not carry it. */
+  private val BranchCol = "__graft_route_branch"
   val BadMessage = "badmsg"
   val Skipped = "skipped"
   def branch(schemaId: String): String = s"branch:$schemaId"
@@ -81,6 +83,13 @@ object Router {
     * source scan regardless of registry size (spec-pinned).
     */
   def tag(df: DataFrame, config: Config): DataFrame = {
+    // Spark resolves column names case-insensitively, so compare that way
+    val clash = df.columns.filter { c =>
+      val l = c.toLowerCase
+      l == BranchCol || l.startsWith(JsonCse.ColPrefix)
+    }
+    require(clash.isEmpty, s"Router.tag input already has working column(s) " +
+      s"${clash.mkString(", ")}; rename them (tag would overwrite and drop them)")
     val ev = col(config.eventCol)
     val dataSchema = ev.getField("data").getField("schema")
     val registeredIds = config.registry.keys.toSeq
@@ -124,20 +133,19 @@ object Router {
       }.get
       .when(payloadBadCse, lit(pre.size + 1))
       .otherwise(lit(0))
-    val tmp = "__graft_route_branch"
     val reasons = pre.map(_._2) :+ "invalid payload"
-    prepped.withColumn(tmp, idxCse)
+    prepped.withColumn(BranchCol, idxCse)
       .withColumn(TagCol,
-        when(col(tmp) === 0, concat(lit("branch:"), dataSchema))
-          .when(col(tmp) === skipIdx, lit(Skipped))
+        when(col(BranchCol) === 0, concat(lit("branch:"), dataSchema))
+          .when(col(BranchCol) === skipIdx, lit(Skipped))
           .otherwise(lit(BadMessage)))
       .withColumn(ReasonCol,
         reasons.zipWithIndex.foldLeft(Option.empty[Column]) {
           case (acc, (r, i)) =>
-            Some(acc.fold(when(col(tmp) === (i + 1), lit(r)))(
-              _.when(col(tmp) === (i + 1), lit(r))))
+            Some(acc.fold(when(col(BranchCol) === (i + 1), lit(r)))(
+              _.when(col(BranchCol) === (i + 1), lit(r))))
         }.get.otherwise(lit(null).cast("string")))
-      .drop((tmp +: cseCols): _*)
+      .drop((BranchCol +: cseCols): _*)
   }
 
   private def payloadValid(ev: Column, config: Config): Column = {

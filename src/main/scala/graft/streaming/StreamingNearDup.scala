@@ -10,9 +10,8 @@ import graft.dedup.MinHash
   * anything already ingested" pipelines.
   *
   * Shape: `foreachBatch` + a persistent parquet band-key index. Per
-  * micro-batch the batch MinHash banding runs unchanged (window functions
-  * aren't available on streaming frames, but inside `foreachBatch` each
-  * micro-batch is a plain DataFrame), new docs' band keys are equi-joined
+  * micro-batch the batch pair-finder's per-document banding kernel
+  * ([[MinHash.bandKeys]]) runs unchanged, new docs' band keys are equi-joined
   * against the index, matching docs are dropped as near-dups, survivors'
   * keys are appended to the index.
   *
@@ -33,14 +32,6 @@ import graft.dedup.MinHash
   */
 object StreamingNearDup {
 
-  /** Band keys for one micro-batch of (idCol, textCol) docs. */
-  private def batchBandKeys(batch: DataFrame, idCol: String, textCol: String,
-                            shingleN: Int, numHashes: Int, numBands: Int): DataFrame =
-    MinHash.bandKeys(
-      MinHash.signatureColsFromHashes(
-        MinHash.distinctHashes(batch, idCol, textCol, shingleN), numHashes),
-      numHashes, numBands)
-
   /** Wire a doc stream through near-dup suppression into `process`.
     *
     * @param indexPath parquet directory holding seen band keys (created on
@@ -54,7 +45,7 @@ object StreamingNearDup {
       process: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
     stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
-      val bands = batchBandKeys(batch, idCol, textCol, shingleN, numHashes, numBands)
+      val bands = MinHash.bandKeys(batch, idCol, textCol, shingleN, numHashes, numBands)
         .persist()
       try {
         // distinguish "no index yet" (first batch) from a genuine read

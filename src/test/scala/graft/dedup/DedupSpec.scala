@@ -2,6 +2,8 @@ package graft.dedup
 
 import graft.SparkSpec
 import graft.text.TextFunctions
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -24,6 +26,121 @@ class DedupSpec extends SparkSpec {
     assert(pairs.contains((1L, 4L)) && pairs.contains((2L, 4L)), "exact dup found")
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L), "unrelated doc 3 excluded")
     assert(!pairs.exists(p => p._1 == 5L || p._2 == 5L), "unrelated doc 5 excluded")
+  }
+
+  /** The relational MinHash formulation the per-document kernel replaced,
+    * kept here only as the parity reference: token posexplode, a `lead`
+    * window fusing n token hashes per shingle, a distinct, a k-column
+    * `min(xxhash64(i, h))` groupBy, a band explode, and the inverted-index
+    * verify.
+    */
+  private object Relational {
+    def distinctHashes(docs: DataFrame, shingleN: Int): DataFrame = {
+      val w = Window.partitionBy(col("id")).orderBy(col("pos"))
+      val leads = (0 until shingleN).map {
+        case 0 => col("th")
+        case i => lead(col("th"), i).over(w)
+      }
+      docs.select(col("doc_id").as("id"),
+        posexplode(split(col("text"), " ")).as(Seq("pos", "t")))
+        .select(col("id"), col("pos"), xxhash64(col("t")).as("th"))
+        .select(col("id"), xxhash64(leads: _*).as("h"), leads.last.isNotNull.as("full"))
+        .filter(col("full"))
+        .select(col("id"), col("h"))
+        .distinct()
+    }
+
+    def mins(hs: DataFrame, k: Int): DataFrame = {
+      val aggs = (0 until k).map(i => min(xxhash64(lit(i), col("h"))).as(s"m$i"))
+      hs.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
+    }
+
+    def signatures(docs: DataFrame, shingleN: Int, k: Int): DataFrame =
+      mins(distinctHashes(docs, shingleN), k)
+        .select(col("id"), array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
+
+    def bandKeys(mins: DataFrame, k: Int, b: Int): DataFrame = {
+      val r = k / b
+      mins.select(col("id"), explode(array((0 until b).map { j =>
+          struct(lit(j).as("band"),
+            xxhash64((j * r until (j + 1) * r).map(i => col(s"m$i")): _*).as("band_key"))
+        }: _*)).as("bk"))
+        .select(col("id"), col("bk.band"), col("bk.band_key"))
+    }
+
+    def nearDupPairs(docs: DataFrame, shingleN: Int, k: Int, b: Int): DataFrame = {
+      val hs = distinctHashes(docs, shingleN)
+      MinHash.verifyJaccard(hs, MinHash.candidatePairs(bandKeys(mins(hs, k), k, b), 1000))
+    }
+  }
+
+  /** Edge cases of the kernel's tokenizer against Spark's `split`. */
+  private def edgeDocs: DataFrame = {
+    val texts = Seq(
+      1L -> null, 2L -> "", 3L -> "two tokens", 4L -> "   ",
+      5L -> "doubled  spaces  inside this  text", 6L -> " leading space on this text",
+      7L -> "trailing space on this text ", 8L -> "doubled  spaces  inside this  text",
+      9L -> "héllo wörld 日本語 テキスト 🙂 emoji tokens here",
+      10L -> "héllo wörld 日本語 テキスト 🙂 emoji tokens there",
+      11L -> "a b a b a b a b a b a b", 12L -> "a b a b a b a b a b a b c",
+      13L -> "x y z x y z x y z", 14L -> "one two three")
+    val invalidUtf8 = Seq(15L -> "61ff20622063206420ff", 16L -> "61ff20622063206420ff")
+    texts.toDF("doc_id", "text").unionByName(invalidUtf8.toDF("doc_id", "hex")
+      .select(col("doc_id"), unhex(col("hex")).cast("string").as("text")))
+  }
+
+  private def parityInputs: Seq[(String, DataFrame)] = Seq(
+    "sf0.001" -> spark.read.parquet(s"$sf0001/documents.parquet"),
+    "sf0.01" -> spark.read.parquet("/root/testdata/sf0.01/documents.parquet"),
+    "edge cases" -> edgeDocs)
+
+  test("kernel signatures and band keys equal the relational formulation") {
+    for ((name, docs) <- parityInputs; (n, k, b) <- Seq((3, 64, 16), (1, 16, 8), (2, 8, 8))) {
+      val want = Relational.signatures(docs, n, k)
+        .as[(Long, Seq[Long])].collect().toMap
+      val got = MinHash.signatures(docs, "doc_id", "text", n, k)
+        .as[(Long, Seq[Long])].collect().toMap
+      assert(got === want, s"$name signatures n=$n k=$k")
+      assert(got.nonEmpty, s"$name vacuous at n=$n")
+      val wantBands = Relational.bandKeys(Relational.mins(
+        Relational.distinctHashes(docs, n), k), k, b)
+        .as[(Long, Int, Long)].collect().toSet
+      val gotBands = MinHash.bandKeys(docs, "doc_id", "text", n, k, b)
+        .as[(Long, Int, Long)].collect().toSet
+      assert(gotBands === wantBands, s"$name band keys n=$n k=$k b=$b")
+    }
+  }
+
+  test("kernel nearDupPairs rows equal the relational formulation") {
+    for ((name, docs) <- parityInputs; (n, k, b) <- Seq((3, 64, 16), (1, 16, 8))) {
+      val want = Relational.nearDupPairs(docs, n, k, b)
+        .as[(Long, Long, Double)].collect().toSet
+      val got = MinHash.nearDupPairs(docs, "doc_id", "text", n, k, b)
+        .select("id1", "id2", "jaccard").as[(Long, Long, Double)].collect().toSet
+      assert(got === want, s"$name pairs n=$n")
+      assert(got.nonEmpty, s"$name vacuous at n=$n")
+    }
+    // the edge rows that drop out (NULL text, fewer than n tokens) and the
+    // tokenizer's empty tokens are in both: pin a few verdicts directly
+    val edge = MinHash.nearDupPairs(edgeDocs, "doc_id", "text")
+      .as[(Long, Long, Double)].collect().map(r => (r._1, r._2) -> r._3).toMap
+    assert(edge((5L, 8L)) === 1.0, "identical texts with doubled spaces")
+    assert(edge((15L, 16L)) === 1.0, "invalid UTF-8 texts still shingle")
+    val sigIds = MinHash.signatures(edgeDocs, "doc_id", "text")
+      .select("id").as[Long].collect().toSet
+    assert(!sigIds.contains(1L) && !sigIds.contains(2L) && !sigIds.contains(3L),
+      "NULL, empty and two-token texts have no 3-shingles")
+    assert(sigIds.contains(4L), "three spaces are four empty tokens: two shingles")
+  }
+
+  test("nearDupPairs stays one lazy plan: no landed stage, no cache") {
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+    spark.catalog.clearCache()
+    val pairs = MinHash.nearDupPairs(docs, "doc_id", "text")
+    val plan = pairs.queryExecution.sparkPlan.toString
+    assert(!plan.contains("graft_stage_"), s"fast path reads a landed stage:\n$plan")
+    pairs.collect()
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("minhash candidates recall exact high-jaccard pairs on real corpus") {

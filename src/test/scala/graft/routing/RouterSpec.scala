@@ -193,6 +193,90 @@ class RouterSpec extends SparkSpec {
     assert(got("both fine") === ("branch:t/1", null))
   }
 
+  test("truncated JSON is undecodable; a well-formed type mismatch stays a payload verdict") {
+    val order = """{"schema":"com.acme/stream/1-0-0","data":{"schema":"com.acme/order/1-0-0","qty":5}}"""
+    val wire = Seq(
+      ("cut at top level", order.take(30)),
+      ("cut after data", order.take(order.indexOf("\"data\"") + 8)),
+      ("cut inside data", order.dropRight(3)),
+      ("type mismatch", order.replace("5", "\"notnum\"")),
+      ("not json", "hello"),
+      ("valid", order))
+      .toDF("name", "json")
+      .withColumn("kinesis", struct(base64(col("json").cast("binary")).as("data")))
+    val decoded = EventCodec.withDecodedEvent(wire, payloadSchema)
+    assert(decoded.schema("event").dataType === payloadSchema,
+      "the corrupt-record helper field must not leak into the event schema")
+    val got = Router.tag(decoded, config)
+      .select(col("name"), col(Router.TagCol), col(Router.ReasonCol))
+      .as[(String, String, String)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    Seq("cut at top level", "cut after data", "cut inside data", "not json").foreach { n =>
+      assert(got(n) === (Router.BadMessage, "undecodable"), n)
+    }
+    assert(got("type mismatch") === (Router.BadMessage, "invalid payload"))
+    assert(got("valid") === ("branch:com.acme/order/1-0-0", null))
+  }
+
+  test("tag refuses input that already carries its working column names") {
+    Seq("__graft_route_branch", "__graft_route_cse0", "__GRAFT_ROUTE_CSE3").foreach { c =>
+      val e = intercept[IllegalArgumentException] {
+        Router.tag(decoded.withColumn(c, lit(1)), config)
+      }
+      assert(e.getMessage.contains(c), c)
+    }
+  }
+
+  test("hoist allowlist: only never-throwing JSON derivations are hoisted") {
+    val raw = col("raw")
+    val df = Seq("""{"a":1}""").toDF("raw")
+    def hoisted(e: org.apache.spark.sql.Column): Seq[String] =
+      JsonCse.hoist(df, e.isNull || e.isNotNull, lit(true))._3
+    val mapType = MapType(StringType, StringType)
+    // each derivation occurs twice; only the safe inner parse may hoist
+    assert(hoisted(try_parse_json(raw)).size === 1)
+    assert(hoisted(parse_json(raw)).isEmpty, "parse_json throws on bad JSON")
+    assert(hoisted(variant_get(try_parse_json(raw), "$.a", "int")).size === 1,
+      "variant_get throws on a failed cast; only its try_parse_json input hoists")
+    assert(hoisted(schema_of_variant(try_parse_json(raw))).size === 1,
+      "schema_of_variant stays inline")
+    assert(hoisted(from_json(raw, mapType)).size === 1, "PERMISSIVE is the default")
+    assert(hoisted(from_json(raw, mapType, Map("mode" -> "PERMISSIVE"))).size === 1)
+    assert(hoisted(from_json(raw, mapType, Map("mode" -> "FAILFAST"))).isEmpty,
+      "FAILFAST from_json throws")
+  }
+
+  test("hoist logs when the column cap leaves repeated parses inline") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val messages = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+    val appender = new AbstractAppender("hoist-cap", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = messages.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val name = JsonCse.getClass.getName
+    val logger = LogManager.getLogger(name).asInstanceOf[Logger]
+    val before = logger.getLevel
+    Configurator.setLevel(name, Level.WARN)
+    logger.addAppender(appender)
+    try {
+      val df = Seq("""{"k0":1}""").toDF("raw")
+      def pred(n: Int) = (0 until n).map { i =>
+        val e = get_json_object(col("raw"), s"$$.k$i")
+        e.isNull || e =!= lit("x")
+      }.reduce(_ && _)
+      assert(JsonCse.hoist(df, pred(JsonCse.MaxHoisted), lit(true))._3.size === JsonCse.MaxHoisted)
+      assert(messages.isEmpty, "no warning when every repeat fits")
+      assert(JsonCse.hoist(df, pred(JsonCse.MaxHoisted + 2), lit(true))._3.size === JsonCse.MaxHoisted)
+      assert(messages.size === 1 && messages.get(0).contains("2 repeated JSON derivations"),
+        messages.toString)
+    } finally {
+      logger.removeAppender(appender)
+      Configurator.setLevel(name, before)
+    }
+  }
+
   test("SchemaId renders and parses vendor/name/version") {
     assert(SchemaId("com.nordstrom", "retail-stream", "1-0-0").render ===
       "com.nordstrom/retail-stream/1-0-0")
